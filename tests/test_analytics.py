@@ -960,13 +960,18 @@ def test_psi_no_drift_is_zero(spark):
 def test_trimmed_mean_hand_case(spark):
     from weaviate_spark.operators.analytics import trimmed_mean
 
-    # 1..20 -> k = floor(20*0.1) = 2 each side -> mean of 3..18 = 10.5
+    # 1..20 -> k = floor(20*0.1) = 2 each side -> mean of 3..18 = 10.5;
+    # the NULL group is its own group, as under GROUP BY / PARTITION BY
     df = spark.createDataFrame(
-        [("a", float(i), i) for i in range(1, 21)], "g string, v double, id long"
+        [(g, float(i), i + off) for g, off in (("a", 0), (None, 100))
+         for i in range(1, 21)],
+        "g string, v double, id long",
     )
-    row = trimmed_mean(df, "g", "v", "id", trim_frac=0.1).collect()[0]
-    assert row["n_kept"] == 16 and row["n_trimmed_each_side"] == 2
-    assert row["trimmed_mean"] == 10.5
+    out = {r["g"]: r for r in trimmed_mean(df, "g", "v", "id", trim_frac=0.1).collect()}
+    assert set(out) == {"a", None}
+    for row in out.values():
+        assert row["n_kept"] == 16 and row["n_trimmed_each_side"] == 2
+        assert row["trimmed_mean"] == 10.5
     # degenerate frac validation
     import pytest as _pt
     with _pt.raises(ValueError):

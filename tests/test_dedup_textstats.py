@@ -1171,10 +1171,16 @@ def test_embedding_centroid_drift_shift(spark):
 def test_training_mix_budgets_and_admission(spark):
     """One giant group and one tiny group: sqrt smoothing gives the
     tiny group a super-proportional budget; admission never exceeds
-    budget by more than one doc; zero-budget edge is exact."""
-    from weaviate_spark.operators.sampling import training_mix_allocation
+    budget by more than one doc; zero-budget edge is exact. A NULL-id
+    doc has a NULL hash, which the admission window sorts first."""
+    from pyspark.sql import Window
+
+    from weaviate_spark.functions.text import tokenize
+    from weaviate_spark.operators.sampling import (
+        _unit_hash, training_mix_allocation)
 
     rows = [(i, "w " * 100, "big") for i in range(20)]
+    rows += [(None, "w " * 300, "big")]
     rows += [(100 + i, "w " * 100, "small") for i in range(2)]
     df = spark.createDataFrame(
         [(i, t.strip(), g) for i, t, g in rows],
@@ -1182,7 +1188,21 @@ def test_training_mix_budgets_and_admission(spark):
     out = {r["lang"]: r for r in training_mix_allocation(
         df, "doc_id", "text", "lang", total_budget=1000).collect()}
     big, small = out["big"], out["small"]
-    assert big["group_tokens"] == 2000 and small["group_tokens"] == 200
+    assert big["group_tokens"] == 2300 and small["group_tokens"] == 200
+    # admission == the plain per-group window over (hash, id)
+    w = (Window.partitionBy("lang")
+         .orderBy(_unit_hash(F.col("doc_id"), "mix").asc(), F.col("doc_id").asc())
+         .rowsBetween(Window.unboundedPreceding, -1))
+    tok = F.size(tokenize(F.col("text"), "word"))
+    naive = (
+        df.withColumn("tok", tok)
+        .withColumn("before", F.coalesce(F.sum(tok).over(w), F.lit(0)))
+        .collect()
+    )
+    for lang, r in out.items():
+        adm = [x["tok"] for x in naive
+               if x["lang"] == lang and x["before"] < r["budget_tokens"]]
+        assert (r["n_docs_selected"], r["tokens_selected"]) == (len(adm), sum(adm))
     # sqrt smoothing: small's budget share (~24%) >> its raw share (~9%)
     assert small["budget_tokens"] > 0.2 * 1000 * 0.9
     for r in (big, small):

@@ -1549,27 +1549,40 @@ def trimmed_mean(
     kept-set an exact integer count, so the result is engine- and
     partition-exact.
 
-    Scale shape: the per-group ranks come from ``grouped_bucketed_rank``
-    (operators/running.py) — ``Window.partitionBy(group)`` would sort
-    the WHOLE fact table on one task per group (3 return flags = 3
-    tasks at any scale); the bucketed form ranks per (group,
-    value-bucket) behind one hash exchange and adds bounded per-group
-    bucket offsets. The order (value, tiebreak) is total, so the
-    descending rank is ``n - rank + 1`` — the second window the old
-    shape ran is derived, not computed. The mean is a second pass over
-    the survivors.
+    Scale shape: the per-group ranks come from ``bucketed_running``
+    with ``group_cols`` (operators/running.py) —
+    ``Window.partitionBy(group)`` would sort the WHOLE fact table on one
+    task per group (3 return flags = 3 tasks at any scale); the bucketed
+    form ranks per (group, value-bucket) behind one hash exchange and
+    adds bounded per-group bucket offsets. A NULL group is its own
+    group. The order (value, tiebreak) is total, so the descending rank
+    is ``n - rank + 1`` — the second window the old shape ran is
+    derived, not computed. The mean is a second pass over the
+    survivors.
     """
     if not 0.0 <= trim_frac < 0.5:
         raise ValueError("trim_frac must be in [0, 0.5)")
-    from weaviate_spark.operators.running import grouped_bucketed_rank
+    from weaviate_spark.operators.running import bucketed_running
 
-    rows = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(value_col).cast("decimal(18,2)").alias("_v"),
-        F.col(tiebreak_col).alias("_tb"),
-    ).where(F.col("_v").isNotNull())
-    ranked = grouped_bucketed_rank(
-        rows, ["_g"], F.col("_v"), [F.col("_tb").asc()], "_ra", "_n"
+    # the bucketed window reads its input three times (sketch, rows,
+    # bucket counts)
+    rows = register_cache(
+        df.select(
+            F.col(group_col).alias("_g"),
+            F.col(value_col).cast("decimal(18,2)").alias("_v"),
+            F.col(tiebreak_col).alias("_tb"),
+        )
+        .where(F.col("_v").isNotNull())
+        .cache()
+    )
+    ranked = bucketed_running(
+        rows,
+        F.col("_v"),
+        [F.col("_v").asc(), F.col("_tb").asc()],
+        [],
+        rank_col="_ra",
+        total_col="_n",
+        group_cols=["_g"],
     ).withColumn(
         "_k", F.floor(F.col("_n") * F.lit(float(trim_frac))).cast("long")
     )

@@ -365,8 +365,6 @@ def training_mix_allocation(
     smoothed weights are fixed to 6dp DECIMAL before the exact Z sum,
     so budgets are engine-portable integers; admission is an integer
     comparison over an (md5, id)-ordered exclusive prefix sum."""
-    from pyspark.sql import Window
-
     from weaviate_spark.functions.text import tokenize
 
     from weaviate_spark.cache import ensure_min_partitions, register_checkpoint
@@ -385,6 +383,7 @@ def training_mix_allocation(
             F.col(id_col).alias("_id"),
             F.col(group_col).alias("_g"),
             F.size(tokenize(F.col(text_col), "word")).cast("long").alias("_tok"),
+            _unit_hash(F.col(id_col), salt).alias("_h"),
         ).where(F.col("_g").isNotNull())
     )
     counts = register_checkpoint(
@@ -416,22 +415,20 @@ def training_mix_allocation(
     # token prefix sum ran as ONE task per group
     # (Window.partitionBy(group) with an unbounded frame) — with a few
     # giant groups (languages) that caps the stage's parallelism at the
-    # group count at ANY scale. grouped_unit_prefix_sum buckets the
-    # [0,1)-uniform hash equal-width (monotone, tie-safe, no sketch
-    # pass), runs the sum per (group, bucket) and adds per-group bucket
-    # offsets back — long sums are exact under any split, so the
-    # admission set (and the oracle hash) is unchanged (guide §2.2).
-    from weaviate_spark.operators.running import grouped_unit_prefix_sum
+    # group count at ANY scale. bucketed_running with group_cols runs
+    # the sum per (group, hash-bucket) and adds per-group bucket offsets
+    # back — long sums are exact under any split, so the admission set
+    # (and the oracle hash) is unchanged. A NULL hash (NULL id) sorts
+    # first, as in the plain window.
+    from weaviate_spark.operators.running import RunningAgg, bucketed_running
 
-    h = _unit_hash(F.col("_id"), salt)
-    ordered = grouped_unit_prefix_sum(
+    ordered = bucketed_running(
         base,
-        ["_g"],
-        h,
-        [F.col("_id").asc()],
-        F.col("_tok"),
-        "_before",
-    )
+        F.col("_h"),
+        [F.col("_h").asc(), F.col("_id").asc()],
+        [RunningAgg("_before", F.col("_tok"), "sum", -1)],
+        group_cols=["_g"],
+    ).withColumn("_before", F.coalesce(F.col("_before"), F.lit(0)))
     admitted = ordered.join(F.broadcast(budgets), "_g").where(
         F.col("_before") < F.col("budget_tokens")
     )

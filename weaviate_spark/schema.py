@@ -357,13 +357,6 @@ def namespace_from_qualified(name: str) -> str:
     return ns if sep else ""
 
 
-def strip_qualification(name: str) -> str:
-    """Entity portion of '<ns>:<entity>' (namespace-portable short form,
-    namespacing/resolver.go StripQualification)."""
-    _, sep, entity = name.partition(NAMESPACE_SEPARATOR)
-    return entity if sep else name
-
-
 def validate_namespace_name(name: str) -> None:
     """Syntax + reserved-name check (ValidateNamespaceNameSyntax +
     controller.go:422; reference splits them across layers, the policy
