@@ -3,19 +3,28 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "build": {...}, "exec": {...},
+   "prepared": [...], "sf": <sf>, ...}
 
 Each headline query is materialized via a count() of the result (the
 driver collects separately for correctness; here we want pure engine
 wall-clock without pandas conversion).
+
+The module is also the one harness the tools share: ``warm`` (JVM and
+codegen warm-up), ``prepare`` (ingest-time index maintenance) and
+``timed_runs`` (the build/exec timing loop). A failure in any of them
+stops the run: a silently skipped build would change what gets timed.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import sys
 import time
+from statistics import median
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -36,6 +45,137 @@ HEADLINE = [
     "knn_classification",       # kNN classification join
 ]
 
+WARM_SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+
+# Protocol (since r07, extending r04's): each query runs SIX times at the
+# bench sf; "cold" is the first run (single-shot incl. plan analysis +
+# AQE compilation — comparable to r01's protocol), "queries"/"value"
+# report the MEDIAN OF THE FIVE subsequent steady-state runs (r06 verdict
+# ask #5: n>=5 medians — measured machine variance between identical
+# runs is 2-3x per query, and r06's driver total moved 23% on unchanged
+# code).
+RUNS = 6
+
+# Contention sentinel (r09 verdict ask #2): the driver's BENCH_r09
+# recorded 2.7x the builder's own number with IDENTICAL plan hashes —
+# machine contention the protocol couldn't flag. Time a fixed, tiny
+# calibration query (warmed first) immediately before and after the
+# timed block and record the load average; a run whose calibration
+# deviates >1.5x from the committed idle-machine reference is marked
+# contended=true, so a phantom regression is visible IN the JSON instead
+# of needing a post-hoc replay.
+CAL_QUERY = "filter_sort_limit"
+CAL_SF_DIR = "/root/testdata/sf0.001"
+# Idle-machine reference, measured at r10 inside a fully-warmed bench
+# session (the calibration runs after the same warmup, so the comparison
+# is like-for-like): 0.151 s after load decayed; a run whose calibration
+# exceeds 1.5x this is flagged contended.
+CAL_REF = 0.15
+
+
+def warm(spark, names, sf_dir: str) -> None:
+    """JVM/codegen warm-up: run every named query shape at the two
+    SMALLER sfs so timed numbers measure steady-state engine time, not
+    first-execution whole-stage-codegen JIT or AQE-replan compilation (a
+    long-lived cluster is always warm; repeated runs confirm ~5x
+    JIT-vs-warm gap locally). The timed sf itself is never queried."""
+    from weaviate_spark.entry_queries import QUERIES
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for warm_sf in WARM_SF_DIRS:
+        if warm_sf == sf_dir or not os.path.isdir(warm_sf):
+            continue
+        for name in names:
+            QUERIES[name](spark, warm_sf).count()
+
+
+def prepare(spark, sf_dir: str) -> list[str]:
+    """Ingest-time index maintenance for ``sf_dir``; returns the names
+    of the artifacts built.
+
+    The reference maintains BM25 corpus statistics (prop-length tracker,
+    term postings counts) on WRITES, so its keyword queries never rescan
+    the corpus for stats. Build the analogous materialized stats tables
+    here, outside the timed region — queries then read them exactly as
+    they would on a live cluster."""
+    from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, with_materialized_stats
+    from weaviate_spark.operators.dedup import _resolve_index
+    from weaviate_spark.operators.quantization import build_bq_artifact
+    from weaviate_spark.sources.tables import load_table
+
+    prepared = []
+    for coll in ("documents", "docs_embedded"):
+        spec = BM25Spec(collection=coll, query="", properties=[BM25Prop("text")],
+                        id_col="doc_id")
+        with_materialized_stats(spec, load_table(spark, sf_dir, coll), (sf_dir, coll))
+        prepared.append(f"bm25_stats:{coll}")
+    # dedup index: the persisted near-dup index. Incremental dedup
+    # pipelines maintain per-doc shingle, SIGNATURE and shingle-SET
+    # tables on ingest (append_to_dedup_index refreshes all three per
+    # micro-batch; the reference analogue is per-write inverted/LSM
+    # maintenance) — so resolving the full index here, not just the
+    # shingle table, is the ingest-time state a live cluster holds.
+    # r11 measurement fix (was: with_shingle_table only, which left the
+    # signature/set derivations inside the FIRST TIMED RUN —
+    # dedup_minhash_lsh "cold" measured index maintenance, not the
+    # query; old numbers kept in BENCH_SELF_r11/OPTIMIZATION_r11.md).
+    _resolve_index(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", 3,
+        (sf_dir, "documents"), num_hashes=16, want_sets=True,
+    )
+    prepared.append("dedup_index:documents")
+    # BQ packed-words artifact (flat-index compress-at-ingest analogue):
+    # built on write so quantized vector queries never pay the encode —
+    # see tools/bench_ann.py for the crossover
+    build_bq_artifact(spark, sf_dir, "embeddings")
+    prepared.append("bq:embeddings")
+    return prepared
+
+
+def timed_runs(spark, fn, sf_dir: str, runs: int = RUNS, action=lambda df: df.count()):
+    """Yield ``(df, build_sec, exec_sec)`` per run: build is the driver's
+    ``fn(spark, sf_dir)`` (plan construction, py4j round trips, any
+    build-time stats lookups), exec is ``action(df)``, by default
+    ``df.count()``."""
+    for _ in range(runs):
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        action(df)
+        yield df, t1 - t0, time.time() - t1
+
+
+def plan_sha(df) -> str:
+    """Hash of the NORMALIZED executed plan (expression ids, codegen
+    numbering, and paths stripped) so a plan change is detectable
+    separately from machine noise: same hash + different time = the
+    machine, different hash = the code."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    norm = re.sub(r"#\d+[A-Za-z]*", "#", plan)       # expr ids
+    norm = re.sub(r"\[plan_id=\d+\]", "", norm)       # exchange ids
+    norm = re.sub(r"\(\d+\)", "()", norm)             # codegen ids
+    norm = re.sub(r"file:[^,\]\s]+", "file:", norm)   # local paths
+    norm = re.sub(r"\d+\.\d+ [KMG]i?B", "", norm)     # size stats
+    return hashlib.sha256(norm.encode()).hexdigest()[:12]
+
+
+def _calibrate(spark, fn) -> float:
+    """Median of 3 SETTLED probe runs. The probe executes inside the same
+    JVM as the bench, and right after the warmup block the JIT/GC
+    background threads are still winding down — the first probe reads
+    that settling (observed: before 0.28s on a 0.04 loadavg machine,
+    after 0.13s). Discard runs while they are still improving >10% (max
+    5 extra), then take the median of the final 3 — the probe measures
+    the MACHINE, not the JVM's warmup tail."""
+    runs: list[float] = []
+    for _ in range(8):
+        t0 = time.time()
+        fn(spark, CAL_SF_DIR).count()
+        runs.append(time.time() - t0)
+        if len(runs) >= 3 and runs[-1] >= 0.9 * runs[-2]:
+            break  # settled: no longer improving
+    return round(sorted(runs[-3:])[1], 3)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -43,141 +183,30 @@ def main() -> None:
     spark = get_spark("weaviate-spark-bench")
     from weaviate_spark.entry_queries import QUERIES
 
-    # JVM/codegen warmup: run every headline query shape at the two
-    # SMALLER sfs so timed numbers measure steady-state engine time, not
-    # first-execution whole-stage-codegen JIT or AQE-replan compilation
-    # (a long-lived cluster is always warm; repeated runs confirm ~5x
-    # JIT-vs-warm gap locally). The bench sf itself is never queried
-    # before timing.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for warm_sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        for name in HEADLINE:
-            fn = QUERIES.get(name)
-            if fn is not None and os.path.isdir(warm_sf) and warm_sf != sf_dir:
-                try:
-                    fn(spark, warm_sf).count()
-                except Exception:
-                    pass
+    warm(spark, HEADLINE, sf_dir)
+    prepared = prepare(spark, sf_dir)
 
-    # Ingest-time index maintenance for the bench sf: the reference
-    # maintains BM25 corpus statistics (prop-length tracker, term
-    # postings counts) on WRITES, so its keyword queries never rescan
-    # the corpus for stats. Build the analogous materialized stats
-    # tables here, outside the timed region — queries then read them
-    # exactly as they would on a live cluster.
-    try:
-        from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, with_materialized_stats
-        from weaviate_spark.sources.tables import load_table
-        for coll in ("documents", "docs_embedded"):
-            spec = BM25Spec(collection=coll, query="", properties=[BM25Prop("text")],
-                            id_col="doc_id")
-            with_materialized_stats(spec, load_table(spark, sf_dir, coll), (sf_dir, coll))
-        # dedup index: the persisted near-dup index. Incremental dedup
-        # pipelines maintain per-doc shingle, SIGNATURE and shingle-SET
-        # tables on ingest (append_to_dedup_index refreshes all three per
-        # micro-batch; the reference analogue is per-write inverted/LSM
-        # maintenance) — so resolving the full index here, not just the
-        # shingle table, is the ingest-time state a live cluster holds.
-        # r11 measurement fix (was: with_shingle_table only, which left
-        # the signature/set derivations inside the FIRST TIMED RUN —
-        # dedup_minhash_lsh "cold" measured index maintenance, not the
-        # query; old numbers kept in BENCH_SELF_r11/OPTIMIZATION_r11.md).
-        from weaviate_spark.operators.dedup import _resolve_index
-        _resolve_index(
-            load_table(spark, sf_dir, "documents"), "doc_id", "text", 3,
-            (sf_dir, "documents"), num_hashes=16, want_sets=True,
-        )
-        # BQ packed-words artifact (flat-index compress-at-ingest
-        # analogue): built on write so quantized vector queries never
-        # pay the encode — see tools/bench_ann.py for the crossover
-        from weaviate_spark.operators.quantization import build_bq_artifact
-        build_bq_artifact(spark, sf_dir, "embeddings")
-    except Exception:
-        pass
-
-    # Protocol (since r07, extending r04's): each query runs SIX times
-    # at the bench sf; "cold" is the first run (single-shot incl. plan
-    # analysis + AQE compilation — comparable to r01's protocol),
-    # "queries"/"value" report the MEDIAN OF THE FIVE subsequent
-    # steady-state runs (r06 verdict ask #5: n>=5 medians — measured
-    # machine variance between identical runs is 2-3x per query, and
-    # r06's driver total moved 23% on unchanged code). "plan_sha" hashes
-    # each query's NORMALIZED executed plan (expression ids, codegen
-    # numbering, and paths stripped) so a plan change is detectable
-    # separately from machine noise: same hash + different time = the
-    # machine, different hash = the code.
-    import hashlib
-    import re
-
-    def plan_sha(df) -> str:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        norm = re.sub(r"#\d+[A-Za-z]*", "#", plan)       # expr ids
-        norm = re.sub(r"\[plan_id=\d+\]", "", norm)       # exchange ids
-        norm = re.sub(r"\(\d+\)", "()", norm)             # codegen ids
-        norm = re.sub(r"file:[^,\]\s]+", "file:", norm)   # local paths
-        norm = re.sub(r"\d+\.\d+ [KMG]i?B", "", norm)     # size stats
-        return hashlib.sha256(norm.encode()).hexdigest()[:12]
-
-    # Contention sentinel (r09 verdict ask #2): the driver's BENCH_r09
-    # recorded 2.7x the builder's own number with IDENTICAL plan hashes
-    # — machine contention the protocol couldn't flag. Time a fixed,
-    # tiny calibration query (warmed above) immediately before and
-    # after the timed block and record the load average; a run whose
-    # calibration deviates >1.5x from the committed idle-machine
-    # reference is marked contended=true, so a phantom regression is
-    # visible IN the JSON instead of needing a post-hoc replay.
-    CAL_QUERY = "filter_sort_limit"
-    CAL_SF_DIR = "/root/testdata/sf0.001"
-    # Idle-machine reference, measured at r10 inside a fully-warmed
-    # bench session (the calibration runs after the same warmup, so the
-    # comparison is like-for-like): 0.151 s after load decayed; a run
-    # whose calibration exceeds 1.5x this is flagged contended.
-    CAL_REF = 0.15
-
-    def _calibrate() -> float:
-        """Median of 3 SETTLED probe runs. The probe executes inside
-        the same JVM as the bench, and right after the warmup block the
-        JIT/GC background threads are still winding down — the first
-        probe reads that settling (observed: before 0.28s on a 0.04
-        loadavg machine, after 0.13s). Discard runs while they are
-        still improving >10% (max 5 extra), then take the median of
-        the final 3 — the probe measures the MACHINE, not the JVM's
-        warmup tail."""
-        fn = QUERIES[CAL_QUERY]
-        runs: list[float] = []
-        for i in range(8):
-            t0 = time.time()
-            fn(spark, CAL_SF_DIR).count()
-            runs.append(time.time() - t0)
-            if len(runs) >= 3 and runs[-1] >= 0.9 * runs[-2]:
-                break  # settled: no longer improving
-        return round(sorted(runs[-3:])[1], 3)
-
-    cal_before = _calibrate()
+    cal_before = _calibrate(spark, QUERIES[CAL_QUERY])
     load_before = list(os.getloadavg())
 
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
+    build: dict[str, float] = {}
+    execs: dict[str, float] = {}
     plans: dict[str, str] = {}
     for name in HEADLINE:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
         runs = []
-        for i in range(6):
-            t0 = time.time()
-            out = fn(spark, sf_dir)
-            out.count()
-            runs.append(round(time.time() - t0, 3))
+        for i, (df, b, e) in enumerate(timed_runs(spark, QUERIES[name], sf_dir)):
             if i == 0:
-                try:
-                    plans[name] = plan_sha(out)
-                except Exception:
-                    plans[name] = "n/a"
-        cold[name] = runs[0]
-        times[name] = sorted(runs[1:])[2]  # median of the 5 steady runs
+                plans[name] = plan_sha(df)
+            runs.append((round(b, 3), round(e, 3), round(b + e, 3)))
+        steady = runs[1:]
+        cold[name] = runs[0][2]
+        times[name] = median(r[2] for r in steady)
+        build[name] = median(r[0] for r in steady)
+        execs[name] = median(r[1] for r in steady)
 
-    cal_after = _calibrate()
+    cal_after = _calibrate(spark, QUERIES[CAL_QUERY])
     load_after = list(os.getloadavg())
     trip_before = cal_before > 1.5 * CAL_REF
     trip_after = cal_after > 1.5 * CAL_REF
@@ -194,9 +223,12 @@ def main() -> None:
         "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
+        "build": build,
+        "exec": execs,
         "cold_value": round(sum(cold.values()), 3),
         "cold": cold,
         "plan_sha": plans,
+        "prepared": prepared,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calibration": {
             "query": CAL_QUERY, "sf_dir": CAL_SF_DIR,

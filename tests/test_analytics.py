@@ -1099,6 +1099,27 @@ def test_pca_recovers_dominant_axis(spark):
     assert out[0]["eigenvalue"] > 0
 
 
+def test_pca_null_and_ragged_elements_are_zeros(spark):
+    """The SQL oracle sums the (i, j) products that exist: a NULL
+    element and a missing trailing element both contribute nothing, and
+    d is the longest vector. The kernel must give the rows of the
+    explicit-zero input for both."""
+    from weaviate_spark.operators.curation import pca_top_component
+
+    def top(rows):
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        return sorted(tuple(r) for r in pca_top_component(
+            df, "vec_id", "embedding", iterations=5).collect())
+
+    rows = [(i, [0.1 * (i % 3), 0.1, 10.0 + i * 0.01]) for i in range(20)]
+    zeroed = [(i, [0.0, v[1], v[2]] if i == 4 else v) for i, v in rows]
+    nulled = [(i, [None, v[1], v[2]] if i == 4 else v) for i, v in rows]
+    assert top(nulled) == top(zeroed)
+    padded = [(i, v[:2] + [0.0] if i % 5 == 0 else v) for i, v in rows]
+    ragged = [(i, v[:2] if i % 5 == 0 else v) for i, v in rows]
+    assert top(ragged) == top(padded)
+
+
 def test_lag_correlation_shifted_series(spark):
     import datetime
 

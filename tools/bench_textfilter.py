@@ -11,10 +11,11 @@ Writes one JSON object with per-sf, per-op wall-clock + docs/sec.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from weaviate_spark.session import get_spark
 

@@ -2,7 +2,7 @@
 
 Usage: python tools/capture_plans.py <out_suffix> [sf_dir] [query ...]
 Writes plans/r11/<query>_<out_suffix>.txt for each headline query
-(after the same warmup/artifact build as bench.py so cached-table and
+(after bench.prepare, the bench's artifact build, so cached-table and
 materialized-stats lineage matches what the bench executes).
 """
 
@@ -13,6 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from weaviate_spark.session import get_spark  # noqa: E402
 
 
@@ -21,35 +22,16 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     spark = get_spark("weaviate-spark-plans")
     from weaviate_spark.entry_queries import QUERIES
-    from bench import HEADLINE
 
-    names = sys.argv[3:] or HEADLINE
+    names = sys.argv[3:] or bench.HEADLINE
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", os.environ.get("PLANS_ROUND", "r12"))
     os.makedirs(out_dir, exist_ok=True)
 
-    try:
-        from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, with_materialized_stats
-        from weaviate_spark.operators.dedup import with_shingle_table
-        from weaviate_spark.sources.tables import load_table
-        for coll in ("documents", "docs_embedded"):
-            spec = BM25Spec(collection=coll, query="", properties=[BM25Prop("text")],
-                            id_col="doc_id")
-            with_materialized_stats(spec, load_table(spark, sf_dir, coll), (sf_dir, coll))
-        with_shingle_table(
-            load_table(spark, sf_dir, "documents"), "doc_id", "text", 3,
-            (sf_dir, "documents"),
-        )
-        from weaviate_spark.operators.quantization import build_bq_artifact
-        build_bq_artifact(spark, sf_dir, "embeddings")
-    except Exception as ex:
-        print(f"artifact build failed: {ex}", file=sys.stderr)
+    bench.prepare(spark, sf_dir)
 
     for name in names:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
-        df = fn(spark, sf_dir)
+        df = QUERIES[name](spark, sf_dir)
         # run once so AQE finalizes and cached tables are built, then
         # capture both the formatted plan and the executed plan
         df.count()

@@ -1,139 +1,46 @@
-"""Per-query profiling for the headline bench (optimization guide §1).
+"""Per-query profile on bench.py's warm-up, prep and timing loop (first run's
+build/cold seconds, steady median) plus what the bench lacks: noop-sink seconds
+(every column computed, where count() can prune), jobs/stages/tasks of one
+steady count() and py_nodes, the Python-worker nodes in the executed plan.
+Usage: python tools/profile_bench.py [sf_dir] [query ...]  (JSON on stdout)"""
 
-For each headline query, after the same warmup as bench.py, measures:
-  * build_sec   — driver-side DataFrame construction (fn(spark, sf_dir)),
-                  i.e. plan construction + any stats collects at build time
-  * cold_sec    — first count() (analysis + codegen + AQE replans)
-  * steady_sec  — median of 5 subsequent count() runs
-  * noop_sec    — median of 3 noop-sink writes (computes EVERY column;
-                  count() can prune — guide §1.4). Reported separately,
-                  never replaces the bench's count() methodology.
-  * jobs/stages/tasks — Spark jobs launched by one steady count() run
-  * py_nodes    — BatchEvalPython/ArrowEvalPython/MapInPandas/FlatMapGroupsInPandas
-                  nodes in the executed plan
-
-Usage: python tools/profile_bench.py [sf_dir] [query ...]
-Writes JSON to stdout (one object), human table to stderr.
-"""
-
-from __future__ import annotations
-
-import json
-import os
-import re
-import sys
-import time
+import json, os, re, sys  # noqa: E401
+from statistics import median
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+import bench  # noqa: E402
 from weaviate_spark.session import get_spark  # noqa: E402
+
+PY_NODES = r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow"
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    names = sys.argv[2:] or bench.HEADLINE
     spark = get_spark("weaviate-spark-profile")
     from weaviate_spark.entry_queries import QUERIES
-    from bench import HEADLINE
 
-    only = sys.argv[2:]
-    names = only or HEADLINE
-
-    # identical warmup to bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for warm_sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        for name in names:
-            fn = QUERIES.get(name)
-            if fn is not None and os.path.isdir(warm_sf) and warm_sf != sf_dir:
-                try:
-                    fn(spark, warm_sf).count()
-                except Exception:
-                    pass
-    try:
-        from weaviate_spark.operators.bm25 import BM25Prop, BM25Spec, with_materialized_stats
-        from weaviate_spark.operators.dedup import with_shingle_table
-        from weaviate_spark.sources.tables import load_table
-        for coll in ("documents", "docs_embedded"):
-            spec = BM25Spec(collection=coll, query="", properties=[BM25Prop("text")],
-                            id_col="doc_id")
-            with_materialized_stats(spec, load_table(spark, sf_dir, coll), (sf_dir, coll))
-        with_shingle_table(
-            load_table(spark, sf_dir, "documents"), "doc_id", "text", 3,
-            (sf_dir, "documents"),
-        )
-        from weaviate_spark.operators.quantization import build_bq_artifact
-        build_bq_artifact(spark, sf_dir, "embeddings")
-    except Exception as ex:
-        print(f"warmup artifact build failed: {ex}", file=sys.stderr)
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    out: dict[str, dict] = {}
+    bench.warm(spark, names, sf_dir)
+    bench.prepare(spark, sf_dir)
+    sc, tracker, out = spark.sparkContext, spark.sparkContext.statusTracker(), {}
     for name in names:
-        fn = QUERIES.get(name)
-        if fn is None:
-            continue
-        sc.setJobDescription(f"profile:{name}")
-        # build time (driver-side)
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        build = time.time() - t0
-        # cold run
-        t0 = time.time()
-        df.count()
-        cold = time.time() - t0
-        # steady runs, rebuilt each time like bench.py does
-        runs = []
-        for _ in range(5):
-            t0 = time.time()
-            d2 = fn(spark, sf_dir)
-            d2.count()
-            runs.append(time.time() - t0)
-        steady = sorted(runs)[2]
-        # job/stage/task count for ONE steady run
+        fn = QUERIES[name]
+        runs = [(b, e) for _, b, e in bench.timed_runs(spark, fn, sf_dir)]
         sc.setJobGroup(f"prof_{name}", name)
-        d3 = fn(spark, sf_dir)
-        d3.count()
-        job_ids = tracker.getJobIdsForGroup(f"prof_{name}")
-        n_stages = 0
-        n_tasks = 0
-        for jid in job_ids:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None and si.numTasks > 0 and si.numCompletedTasks > 0:
-                    n_stages += 1
-                    n_tasks += si.numTasks
+        (df := fn(spark, sf_dir)).count()
         sc.setJobGroup("default", "")
-        # noop sink (guide §1.4) — computes every column
-        noop_runs = []
-        for _ in range(3):
-            d4 = fn(spark, sf_dir)
-            t0 = time.time()
-            d4.write.format("noop").mode("overwrite").save()
-            noop_runs.append(time.time() - t0)
-        noop = sorted(noop_runs)[1]
-        plan = d3._jdf.queryExecution().executedPlan().toString()
-        py_nodes = len(re.findall(
-            r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow",
-            plan))
-        out[name] = {
-            "build_sec": round(build, 3),
-            "cold_sec": round(cold, 3),
-            "steady_sec": round(steady, 3),
-            "noop_sec": round(noop, 3),
-            "jobs": len(job_ids),
-            "stages": n_stages,
-            "tasks": n_tasks,
-            "py_nodes": py_nodes,
-        }
-        print(f"{name:28s} build={build:6.3f} cold={cold:6.3f} "
-              f"steady={steady:6.3f} noop={noop:6.3f} jobs={len(job_ids):2d} "
-              f"stages={n_stages:3d} tasks={n_tasks:4d} py={py_nodes}",
-              file=sys.stderr)
-        sc.setJobDescription(None)
-
+        jobs = tracker.getJobIdsForGroup(f"prof_{name}")
+        stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        ran = [s for s in stages if s is not None and s.numTasks > 0 and s.numCompletedTasks > 0]
+        noop = [e for _, _, e in bench.timed_runs(
+            spark, fn, sf_dir, 3, lambda d: d.write.format("noop").mode("overwrite").save())]
+        out[name] = {k: round(v, 3) for k, v in {
+            "build_sec": runs[0][0], "cold_sec": runs[0][1],
+            "steady_sec": median(b + e for b, e in runs[1:]), "noop_sec": median(noop),
+            "jobs": len(jobs), "stages": len(ran), "tasks": sum(s.numTasks for s in ran),
+            "py_nodes": len(re.findall(PY_NODES, df._jdf.queryExecution().executedPlan().toString())),
+        }.items()}
+        print(f"{name:28s} " + " ".join(f"{k}={v}" for k, v in out[name].items()), file=sys.stderr)
     print(json.dumps({"sf_dir": sf_dir, "profile": out}))
     spark.stop()
 

@@ -14,6 +14,7 @@ Usage: python tools/train_pq.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -26,9 +27,7 @@ SEED = 42
 DIM = 64
 
 
-import sys as _sys
-
-_sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from weaviate_spark.operators.quantization import pq_train
 

@@ -57,27 +57,39 @@ def register_checkpoint(df: DataFrame) -> DataFrame:
 
     ``Dataset.unpersist()`` is a no-op on checkpointed frames (the cache
     manager never registered the RDD), so ``release_caches`` frees these
-    through JVM-level ``JavaRDD.unpersist`` on the recorded RDD id —
-    same mechanism as operators/graph.py's iterative generations.
-
-    ``SPARK_GRAFT_CHECKPOINT_MODE=cache`` falls back to the
-    ``register_cache(df.cache())`` form: localCheckpoint blocks are
-    unrecoverable on executor loss (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND),
-    so clusters with decommissioning / dynamic allocation can trade the
-    flat-plan win for retry-ability. Single-node / static-executor
-    deployments (and the bench) keep the checkpoint default."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_CHECKPOINT_MODE", "local") == "cache":
-        return register_cache(df.cache())
+    through ``release_checkpoint`` on the recorded RDD id."""
     ck = df.localCheckpoint(eager=False)
     try:
-        ck._ckpt_rdd_id = int(
-            ck._jdf.queryExecution().analyzed().rdd().id())
+        ck._ckpt_rdd_ids = checkpoint_rdd_ids(ck)
     except Exception:
-        ck._ckpt_rdd_id = None
+        ck._ckpt_rdd_ids = set()
     _live_checkpoints.append(ck)
     return ck
+
+
+def checkpoint_rdd_ids(ck: DataFrame) -> set[int]:
+    """The persistent RDD id of a checkpointed frame, read off its
+    analyzed plan (a LogicalRDD wrapping exactly the checkpoint RDD)."""
+    return {int(ck._jdf.queryExecution().analyzed().rdd().id())}
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free a checkpoint's blocks NOW (not at GC time) through the
+    JVM-level ``JavaRDD.unpersist`` on its recorded ``_ckpt_rdd_ids``:
+    ``Dataset.unpersist()`` is a NO-OP for checkpointed frames (verified
+    on PySpark 4.1.2: it routes through the cacheManager, which never
+    registered the checkpoint RDD). Only call once the frame has no
+    remaining consumer: a released localCheckpoint cannot be recomputed
+    (its lineage is truncated) — any later read raises
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    ids = getattr(df, "_ckpt_rdd_ids", None)
+    if not ids:
+        return  # not a recorded checkpoint (e.g. a plain createDataFrame)
+    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
+    for rid in ids:
+        jrdd = jmap.get(rid)
+        if jrdd is not None:  # never materialized -> nothing to free
+            jrdd.unpersist(False)
 
 
 # (session, input files) -> scan partition count. df.rdd.getNumPartitions()
@@ -195,14 +207,8 @@ def release_caches() -> None:
             pass
     _live_caches = []
     for df in _live_checkpoints:
-        rid = getattr(df, "_ckpt_rdd_id", None)
-        if rid is None:
-            continue
         try:
-            jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-            jrdd = jmap.get(rid)
-            if jrdd is not None:  # never materialized -> nothing to free
-                jrdd.unpersist(False)
+            release_checkpoint(df)
         except Exception:
             pass
     _live_checkpoints = []

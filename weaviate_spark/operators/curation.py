@@ -859,6 +859,11 @@ def pca_top_component(
     # The direct d^2 array-explode variant was measured 7x SLOWER than
     # the join (4096 structs materialized per row — the capped-array
     # anti-pattern from the r11 posting-list work).
+    # NULL/ragged semantics match the SQL form (a sum over the (i, j)
+    # products that exist): NULL elements arrive as 0 and each batch is
+    # zero-padded to its longest vector, so a short vector adds nothing
+    # to the cells past its length; the (i, j) group-by below then sums
+    # partials of different widths.
     def _gram_batches(batches):
         import numpy as np
         import pandas as pd
@@ -867,9 +872,16 @@ def pca_top_component(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
+            vs = pdf["_vec"].to_numpy()
+            lens = np.fromiter(map(len, vs), np.int64, len(vs))
+            X = np.zeros((len(vs), lens.max()))
+            X[np.arange(lens.max()) < lens[:, None]] = np.concatenate(vs)
             g = X.T @ X
-            acc = g if acc is None else acc + g
+            if acc is not None:
+                if acc.shape[0] > g.shape[0]:
+                    acc, g = g, acc
+                g[:acc.shape[0], :acc.shape[0]] += acc
+            acc = g
         if acc is not None:
             dd = acc.shape[0]
             i, j = np.unravel_index(np.arange(dd * dd), (dd, dd))
@@ -879,7 +891,8 @@ def pca_top_component(
             })
 
     vecs = ensure_min_partitions(
-        df.select(F.col(vec_col).alias("_vec")).where(F.col("_vec").isNotNull())
+        df.where(F.col(vec_col).isNotNull()).select(F.transform(
+            vec_col, lambda x: F.coalesce(x.cast("double"), F.lit(0.0))).alias("_vec"))
     )
     gram = register_cache(
         vecs.mapInPandas(_gram_batches, "_i int, _j int, _g double")
@@ -887,8 +900,7 @@ def pca_top_component(
         .agg(F.sum("_g").alias("_g"))
         .cache()
     )
-    d = int(df.select(F.size(F.col(vec_col)).alias("_d"))
-            .where(F.col(vec_col).isNotNull()).first()["_d"])
+    d = int(gram.agg(F.max("_i")).first()[0]) + 1
     v = gram.sparkSession.range(d).select(
         F.col("id").cast("int").alias("_j"),
         F.round(F.lit(1.0 / float(d) ** 0.5), 6).alias("_v"),

@@ -36,7 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from weaviate_spark.cache import local_df, register_cache, register_checkpoint
+from weaviate_spark.cache import (
+    checkpoint_rdd_ids, local_df, register_cache, register_checkpoint, release_checkpoint,
+)
 
 
 def _persistent_rdd_ids(spark) -> set:
@@ -46,16 +48,10 @@ def _persistent_rdd_ids(spark) -> set:
 
 def _eager_local_checkpoint(df: DataFrame, storage_level=None) -> DataFrame:
     """``localCheckpoint(eager=True)`` that records the persistent RDD
-    ids the checkpoint registered, so ``_release_checkpoint`` can free
-    them later. ``Dataset.unpersist()`` is a NO-OP for checkpointed
-    frames (verified on PySpark 4.1.2: it routes through the
-    cacheManager, which never registered the checkpoint RDD — storage
-    still shows the blocks afterwards), so block release must go
-    through the JVM-level ``JavaRDD.unpersist`` on the checkpoint RDD
-    itself.
+    ids the checkpoint registered, so ``release_checkpoint`` can free
+    them later (``Dataset.unpersist()`` is a no-op on checkpoints).
 
-    The id is read off the checkpointed Dataset's analyzed plan (a
-    LogicalRDD wrapping exactly the checkpoint RDD) — NOT a
+    The id is read off the checkpointed Dataset's analyzed plan — NOT a
     before/after diff of the persistent-RDD set, which would also
     capture a caller's lazily-cached upstream frame materializing
     inside the same eager job and later force-unpersist a cache the
@@ -65,27 +61,11 @@ def _eager_local_checkpoint(df: DataFrame, storage_level=None) -> DataFrame:
     ck = (df.localCheckpoint(eager=True) if storage_level is None
           else df.localCheckpoint(eager=True, storageLevel=storage_level))
     try:
-        ck._ckpt_rdd_ids = {int(
-            ck._jdf.queryExecution().analyzed().rdd().id())}
+        ck._ckpt_rdd_ids = checkpoint_rdd_ids(ck)
     except Exception:
         # fallback: the diff (over-approximate, but never empty)
         ck._ckpt_rdd_ids = _persistent_rdd_ids(spark) - before
     return ck
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a checkpointed generation's blocks NOW (not at GC time).
-    Only call once the frame has no remaining consumer: a released
-    localCheckpoint cannot be recomputed (its lineage is truncated) —
-    any later read raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
-    ids = getattr(df, "_ckpt_rdd_ids", None)
-    if not ids:
-        return  # not one of ours (e.g. round 0's plain createDataFrame)
-    jmap = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
 
 
 def pagerank(
@@ -317,9 +297,9 @@ def sssp(
         # eager checkpoint materialized -> the previous generation has
         # no consumer left; release its blocks so `iterations` rounds
         # hold 2 generations, not `iterations`. Must go through the
-        # JVM (see _release_checkpoint) — Dataset.unpersist() silently
+        # JVM (see cache.release_checkpoint) — Dataset.unpersist() silently
         # does nothing for checkpointed frames.
-        _release_checkpoint(old)
+        release_checkpoint(old)
     return dist.select(F.col("_n").alias("node"), F.col("_dist").alias("distance"))
 
 
@@ -394,7 +374,7 @@ def kcore_peel(
         # the 16 GiB sf10 heap — this release now works as the comments
         # always claimed, freeing each generation deterministically
         # instead of waiting on the ContextCleaner).
-        _release_checkpoint(old)
+        release_checkpoint(old)
         if cur == prev:
             break  # fixpoint: further peels are no-ops
         prev = cur
